@@ -151,6 +151,43 @@ def heal_replaced_dir(spark: SparkSession, live: str) -> bool:
     return False
 
 
+def qualify(spark: SparkSession, path: str) -> str:
+    """``path`` fully qualified against its filesystem — the form Spark
+    reports input files in (``file:/data/t`` for a scheme-less local
+    path under a local ``fs.defaultFS``, ``hdfs://nn:8020/data/t`` on
+    a cluster). Characters are not percent-encoded."""
+    fs, p = _fs_path(spark, path)
+    return fs.makeQualified(p).toString()
+
+
+def delete_files(spark: SparkSession, paths: list[str],
+                 stop_at: str | None = None) -> None:
+    """Delete each file of ``paths`` (all on one filesystem; Hadoop's
+    local filesystem removes the ``.crc`` checksum sibling with the
+    file), then every parent directory the deletes left empty, up to
+    but excluding ``stop_at`` — a recycled partition leaves no empty
+    ``k=v`` directory behind. ``paths`` and ``stop_at`` must be
+    :func:`qualify`-ed for the parent walk to find ``stop_at``."""
+    if not paths:
+        return
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs, _ = _fs_path(spark, paths[0])
+    parents = set()
+    for path in paths:
+        p = Path(path)
+        if not fs.delete(p, False) and fs.exists(p):
+            raise OSError(f"delete failed: {path}")
+        parents.add(path.rsplit("/", 1)[0])
+    stop = stop_at.rstrip("/") + "/" if stop_at else None
+    for parent in parents:
+        while stop and parent.startswith(stop):
+            p = Path(parent)
+            if not fs.exists(p) or len(fs.listStatus(p)):
+                break
+            fs.delete(p, True)
+            parent = parent.rsplit("/", 1)[0]
+
+
 def list_files(spark: SparkSession, path: str,
                suffix: str = ".parquet") -> list[str]:
     """Full paths of every ``suffix`` file under ``path`` (recursive,

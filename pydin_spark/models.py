@@ -26,37 +26,20 @@ from __future__ import annotations
 import datetime as dt
 import glob as _glob
 import gzip as _gzip
+import json
 import os
 import re
 import shutil
 import warnings
+from urllib.parse import unquote
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
-from . import fields as _fields
+from . import fields as _fields, fs as _fs
 from .calendar import Day, Period
 from .sources import Database, Filesystem, Server, registry as default_registry
-
-
-#: characters Spark/Hive escape in partition directory names
-#: (ExternalCatalogUtils.escapePathName)
-_PART_ESCAPE = set('"#%\'*/:=?\\\x7f{[]^')
-
-
-def _partition_path_value(value) -> str:
-    """Render a partition value the way Spark writes its directory name:
-    NULL → ``__HIVE_DEFAULT_PARTITION__``, reserved characters →
-    ``%XX`` escapes — so recycle deletes the directory Spark actually
-    created instead of a phantom ``c=None`` path."""
-    if value is None:
-        return "__HIVE_DEFAULT_PARTITION__"
-    out = []
-    for ch in str(value):
-        if ch in _PART_ESCAPE or ord(ch) < 32:
-            out.append("%{:02X}".format(ord(ch)))
-        else:
-            out.append(ch)
-    return "".join(out)
 
 
 def _path_bytes(path: str) -> int | None:
@@ -72,6 +55,250 @@ def _path_bytes(path: str) -> int | None:
     except OSError:
         pass
     return None
+
+
+# ---------------------------------------------------------------------------
+# sink metadata: watermark and recycle answered from parquet footers
+# ---------------------------------------------------------------------------
+#
+# The reference answers the watermark and the recycle with a MAX and a
+# DELETE the source database runs (models.py:1172-1178, 469-475). On a
+# parquet sink the same answers sit in the footers: row-group min/max
+# and null-count statistics bound every file's values, so the watermark
+# is a max over footers and recycle only has to rewrite files whose key
+# range mixes runs. Anything the footers cannot answer exactly (remote
+# path, non-integral column, missing stats, ORC) goes to Spark.
+
+#: converted types of the parquet columns Spark reads as byte, short,
+#: int and long (the footer min/max of these is the exact value)
+_INT_ANNOTATIONS = {"NONE", "INT_8", "INT_16", "INT_32", "INT_64"}
+
+#: footer key-value entry where Spark's writer records the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips (``HadoopFSUtils.
+    shouldFilterOutPathName``): ``_``-prefixed unless a ``k=v``
+    partition (``_temporary``, ``_SUCCESS``, parquet ``_metadata``
+    summaries), ``.``-prefixed (``.crc`` checksums), in-flight copies."""
+    return ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+def _local_path(qualified: str) -> str | None:
+    """OS path of a :func:`~pydin_spark.fs.qualify`-ed path when it is
+    on the local filesystem (``file://``, or scheme-less under a local
+    ``fs.defaultFS``)."""
+    if qualified.startswith("file:/") and not qualified.startswith("file://"):
+        return qualified[len("file:"):]
+    return None
+
+
+def _local_data_files(root: str) -> list[str] | None:
+    """Data files of a local sink as Spark lists them: ``root`` itself
+    when it is a file, else the visible files of a flat or
+    ``k=v``-partitioned directory (``[]`` when it does not exist).
+    None for a layout Spark does not read as one table (a subdirectory
+    that is not a partition, files at mixed depths)."""
+    if os.path.isfile(root):
+        return [root]
+    files, depths = [], set()
+    pending = [(root, 0)]
+    while pending:
+        directory, depth = pending.pop()
+        try:
+            entries = list(os.scandir(directory))
+        except FileNotFoundError:
+            continue
+        for entry in entries:
+            if _hidden(entry.name):
+                continue
+            if entry.is_dir():
+                if "=" not in entry.name:
+                    return None
+                pending.append((entry.path, depth + 1))
+            else:
+                files.append(entry.path)
+                depths.add(depth)
+    return files if len(depths) <= 1 else None
+
+
+def _int_column(metadata, name: str) -> int | None:
+    """Leaf index of top-level column ``name`` in a parquet footer when
+    Spark reads it as byte, short, int or long; else None."""
+    schema = metadata.schema
+    for j in range(len(schema)):
+        column = schema.column(j)
+        if column.path != name or column.name != name:
+            continue
+        logical = column.logical_type
+        signed = logical.type == "NONE" or (
+            logical.type == "INT"
+            and json.loads(logical.to_json()).get("isSigned", False))
+        if (signed and column.max_repetition_level == 0
+                and column.physical_type in ("INT32", "INT64")
+                and column.converted_type in _INT_ANNOTATIONS):
+            return j
+        return None
+    return None
+
+
+def _row_groups(metadata, j: int):
+    """``(min, max, nulls)`` of column ``j`` per non-empty row group,
+    min/max None for an all-null group; raises LookupError when a
+    group lacks the statistics to say."""
+    for i in range(metadata.num_row_groups):
+        group = metadata.row_group(i)
+        if group.num_rows == 0:
+            continue
+        stats = group.column(j).statistics
+        if stats is None or not stats.has_null_count:
+            raise LookupError("no null count")
+        if stats.null_count == group.num_rows:
+            yield None, None, stats.null_count
+        elif not stats.has_min_max:
+            raise LookupError("no min/max")
+        else:
+            yield stats.min, stats.max, stats.null_count
+
+
+def _footers(files: list[str], column: str):
+    """``(path, metadata, leaf index)`` per file; raises LookupError
+    when a file is not parquet or ``column`` is not integral in it."""
+    import pyarrow.parquet as pq
+    for path in files:
+        try:
+            metadata = pq.read_metadata(path)
+        except (OSError, ValueError) as exc:  # not a parquet footer
+            raise LookupError(path) from exc
+        j = _int_column(metadata, column)
+        if j is None:
+            raise LookupError(column)
+        yield path, metadata, j
+
+
+def _sink_last_value(model, value_field: str):
+    """max(value_field) over a sink: the largest row-group max statistic
+    across the data files of a local parquet sink (all-null groups and
+    zero-row files contribute nothing), else one Spark aggregate."""
+    root = model._parquet_root()
+    try:
+        local = _local_path(_fs.qualify(model.spark, root)) if root else None
+    except Py4JError:  # no filesystem for the scheme: Spark decides
+        local = None
+    files = _local_data_files(local) if local else None
+    if files is not None:
+        try:
+            return max((hi for _, metadata, j in _footers(files, value_field)
+                        for _, hi, _ in _row_groups(metadata, j)
+                        if hi is not None), default=None)
+        except LookupError:
+            pass
+    try:
+        df = model.extract()
+    except Exception:
+        return None
+    if df is None or value_field not in df.columns:
+        return None
+    row = df.agg(F.max(value_field).alias("wm")).first()
+    return row["wm"] if row else None
+
+
+def _footer_kinds(local_root: str, key_field_label: str, key_value):
+    """``(pure, mixed, n_files, schema)`` of a local parquet sink from
+    footer stats: a file is pure when every row holds ``key_value``,
+    mixed when its key range may hold it next to other rows, untouched
+    otherwise; ``schema`` is the Spark schema a pure file's footer
+    records, if any. None when the footers cannot say exactly."""
+    if not isinstance(key_value, int) or isinstance(key_value, bool):
+        return None
+    files = _local_data_files(local_root)
+    if files is None:
+        return None
+    pure, mixed, schema = [], [], None
+    try:
+        for path, metadata, j in _footers(files, key_field_label):
+            groups = list(_row_groups(metadata, j))
+            hit = any(lo is not None and lo <= key_value <= hi
+                      for lo, hi, _ in groups)
+            only = all(lo == hi == key_value and nulls == 0
+                       for lo, hi, nulls in groups)
+            if hit:
+                (pure if only else mixed).append("file:" + path)
+            if hit and only and schema is None:
+                schema = (metadata.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    except LookupError:
+        return None
+    if schema is not None:
+        schema = T.StructType.fromJson(json.loads(schema))
+    return pure, mixed, len(files), schema
+
+
+def _scan_kinds(model, key_field_label: str, keep: Column):
+    """``(pure, mixed, n_files, schema)`` from one Spark scan of the key
+    column and ``_metadata.file_path``; None when the sink has no such
+    column."""
+    df = model.extract()
+    if key_field_label not in df.columns:
+        return None
+    drop = ~F.coalesce(keep, F.lit(False))
+    rows = (df.select(F.col("_metadata.file_path").alias("path"),
+                      drop.alias("drop"))
+            .groupBy("path")
+            .agg(F.min("drop").alias("only"), F.max("drop").alias("hit"))
+            .where("hit").collect())
+    # file_path is URL-encoded; Hadoop path strings are not
+    pure = [unquote(r["path"]) for r in rows if r["only"]]
+    mixed = [unquote(r["path"]) for r in rows if not r["only"]]
+    return pure, mixed, len(df.inputFiles()), df.schema
+
+
+def _recycle_files(model, root: str, format_name: str,
+                   key_field_label: str, key_value) -> None:
+    """Delete a prior run's rows from a lakehouse sink directory, file
+    by file: a file holding only the run is deleted, a file whose key
+    range cannot hold it is left untouched, and only a file that mixes
+    runs is rewritten — its surviving rows are appended (re-read with
+    ``basePath``, so partition columns come back), then the original
+    is deleted. A crash in between duplicates rows, never loses them.
+    Files are classified from parquet footers when the sink is local
+    parquet with an integral key, else by one column-pruned scan."""
+    spark = model.spark
+    if not _fs.is_dir(spark, root):
+        return
+    qroot = _fs.qualify(spark, root)
+    keep = (F.col(key_field_label) != F.lit(key_value)) \
+        | F.col(key_field_label).isNull()
+    kinds = None
+    local = _local_path(qroot) if format_name == "parquet" else None
+    if local is not None:
+        kinds = _footer_kinds(local, key_field_label, key_value)
+    if kinds is None:
+        kinds = _scan_kinds(model, key_field_label, keep)
+        if kinds is None:
+            return
+    pure, mixed, n_files, schema = kinds
+    if not pure and not mixed:
+        return
+    partition_dirs = (mixed or pure)[0][len(qroot) + 1:].split("/")[:-1]
+    partitions = [unquote(d.split("=", 1)[0]) for d in partition_dirs]
+    if mixed:
+        (spark.read.format(format_name).option("basePath", qroot)
+         .load(mixed).where(keep)
+         .write.mode("append").format(format_name)
+         .partitionBy(*partitions).save(root))
+    elif len(pure) == n_files and not partitions:
+        # an emptied flat sink keeps one zero-row file, so it stays
+        # readable with its schema (as a full rewrite left it); a known
+        # schema spares the inference job, limit(0) the file read
+        reader = spark.read.format(format_name)
+        if schema is not None:
+            reader = reader.schema(schema)
+        reader.load(pure[0]).limit(0).write.mode("append") \
+            .format(format_name).save(root)
+    _fs.delete_files(spark, pure + mixed, stop_at=qroot)
+    spark.catalog.refreshByPath(root)
 
 
 # ---------------------------------------------------------------------------
@@ -238,15 +465,15 @@ class Loadable:
         raise NotImplementedError
 
     def get_last_value(self, value_field: str):
-        """max(value_field) over current sink contents (models.py:1172-1178)."""
-        try:
-            df = self.extract()  # type: ignore[attr-defined]
-        except Exception:
-            return None
-        if df is None or value_field not in df.columns:
-            return None
-        row = df.agg(F.max(value_field).alias("wm")).first()
-        return row["wm"] if row else None
+        """max(value_field) over current sink contents (models.py:1172-1178).
+        A local parquet sink answers an integral column from its parquet
+        footers without a Spark job; anything else runs one aggregate."""
+        return _sink_last_value(self, value_field)
+
+    def _parquet_root(self) -> str | None:
+        """Path of the sink's parquet data files when it is plain
+        parquet (footers then answer watermark and recycle), else None."""
+        return None
 
     def recycle(self, key_field_label: str, key_value) -> None:
         """Delete rows of a prior run before re-load (models.py:469-475)."""
@@ -302,11 +529,7 @@ class FileModel(Model, Extractable, Loadable):
 
     def prepare(self) -> None:
         if self.cleanup:
-            target = self.resolved_path
-            if os.path.isdir(target):
-                shutil.rmtree(target)
-            elif os.path.isfile(target):
-                os.remove(target)
+            self.prepare_force()
 
     def load(self, df: DataFrame) -> int:
         df = self.attach_key_field(df)
@@ -355,8 +578,10 @@ class FileModel(Model, Extractable, Loadable):
                 else self.resolved_path)
 
     def recycle(self, key_field_label: str, key_value) -> None:
-        """Rewrite the dataset minus the recycled run's rows. On Delta/JDBC
-        this is a real DELETE; on raw files it is read-filter-overwrite."""
+        """Rewrite the dataset minus the recycled run's rows
+        (read-filter-overwrite). Row-oriented and single-file sinks use
+        this; parquet/ORC directories recycle file by file and Delta
+        runs a DELETE."""
         df = self.extract()
         if key_field_label not in df.columns:
             return
@@ -372,11 +597,7 @@ class FileModel(Model, Extractable, Loadable):
         self.spark.catalog.refreshByPath(self.resolved_path)
 
     def prepare_force(self) -> None:
-        target = self.resolved_path
-        if os.path.isdir(target):
-            shutil.rmtree(target)
-        elif os.path.isfile(target):
-            os.remove(target)
+        _fs.delete(self.spark, self.resolved_path, ignore_errors=True)
 
 
 class Parquet(FileModel):
@@ -413,65 +634,27 @@ class Parquet(FileModel):
             writer = writer.partitionBy(*self.partition_by)
         writer.save(self._write_target())
 
+    def _parquet_root(self) -> str | None:
+        return self.resolved_path if self.format_name == "parquet" else None
+
     def recycle(self, key_field_label: str, key_value) -> None:
-        """Partition-scoped recycle when the sink is partitioned: only
-        partitions containing the recycled run's rows are rewritten
-        (dynamic partition overwrite) — the difference between touching
-        one day and rewriting 100 TB. Unpartitioned sinks fall back to
-        the full read-filter-overwrite."""
-        if not self.partition_by:
+        """File-scoped recycle, partitioned or not: files holding only
+        the recycled run are deleted, files whose key range cannot hold
+        it stay untouched, and only files mixing runs are rewritten.
+        Local parquet sinks are classified from their footers without a
+        Spark job; ORC and remote paths by one column-pruned scan. A
+        ``single_file`` sink is one file, so it keeps the full
+        read-filter-overwrite."""
+        if self.single_file:
             return super().recycle(key_field_label, key_value)
-        df = self.extract()
-        if key_field_label not in df.columns:
-            return
-        affected = (df.where(F.col(key_field_label) == F.lit(key_value))
-                    .select(*self.partition_by).distinct())
-        # materialize the affected-partition list BEFORE overwriting:
-        # both it and `kept` must never re-read the rewritten files
-        affected_rows = affected.collect()
-        affected = self.spark.createDataFrame(affected_rows,
-                                              schema=affected.schema)
-        # null-safe semi join: a NULL partition value must still match
-        # its own partition row, or survivors in the NULL partition are
-        # dropped from the rewrite and then deleted with the directory
-        cond = None
-        for c in self.partition_by:
-            e = df[c].eqNullSafe(affected[c])
-            cond = e if cond is None else cond & e
-        kept = (df.join(F.broadcast(affected), cond, "left_semi")
-                .where((F.col(key_field_label) != F.lit(key_value))
-                       | F.col(key_field_label).isNull())
-                .localCheckpoint())
-        spark = self.spark
-        previous = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                                  "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (kept.write.mode("overwrite").partitionBy(*self.partition_by)
-             .format(self.format_name).save(self.resolved_path))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           previous)
-        # dynamic overwrite never touches partitions with no surviving
-        # rows — delete those directories explicitly
-        survived = {tuple(r) for r in (kept.select(*self.partition_by)
-                                       .distinct().collect())}
-        for row in affected_rows:
-            if tuple(row) in survived:
-                continue
-            part_dir = os.path.join(
-                self.resolved_path,
-                *[f"{c}={_partition_path_value(row[c])}"
-                  for c in self.partition_by])
-            if os.path.isdir(part_dir):
-                shutil.rmtree(part_dir)
-        spark.catalog.refreshByPath(self.resolved_path)
+        _recycle_files(self, self.resolved_path, self.format_name,
+                       key_field_label, key_value)
 
 
 class ORC(Parquet):
     """ORC source/sink (engine extension). The entire Parquet surface —
     predicate pushdown, column pruning, partitioned layout,
-    partition-scoped recycle — is inherited through the format-generic
+    file-scoped recycle — is inherited through the format-generic
     reader/writer; the format choice is usually dictated by the
     surrounding warehouse (Hive-era lakes are ORC)."""
 
@@ -542,9 +725,9 @@ class Delta(Parquet):
 
     Why it matters at 100 TB: ``recycle`` and watermark reloads become
     metadata-level ``DELETE``/``MERGE`` operations (transaction-log
-    rewrite of only the affected files) instead of the raw-parquet
-    read-filter-overwrite, and concurrent writers get ACID isolation.
-    Absent the package — as in this container — construction raises
+    rewrite of only the affected files) with no listing of the data
+    files, and concurrent writers get ACID isolation.
+    Absent the package, construction raises
     with the exact dependency to add instead of Spark's generic
     DATA_SOURCE_NOT_FOUND at action time.
     """
@@ -641,7 +824,6 @@ class CSV(FileModel):
             # PERMISSIVE only materializes the corrupt-record column when
             # it is declared in an explicit schema — infer first, then
             # append the corrupt field so error_limit accounting works
-            from pyspark.sql import types as T
             inferred = (self.spark.read
                         .option("sep", self.delimiter)
                         .option("header", self.head)
@@ -910,8 +1092,7 @@ class Table(Model, Extractable, Loadable):
             # truncate-vs-delete is the JDBC writer's `truncate` option at
             # overwrite time (reference models.py:454-459); nothing eager.
             return
-        if os.path.isdir(self.fs_path):
-            shutil.rmtree(self.fs_path)
+        _fs.delete(self.spark, self.fs_path, ignore_errors=True)
 
     def load(self, df: DataFrame) -> int:
         df = self.attach_key_field(df)
@@ -1059,14 +1240,15 @@ class Table(Model, Extractable, Loadable):
         return inserted
 
     def get_last_value(self, value_field: str):
-        try:
-            df = self.extract()
-        except Exception:
-            return None
-        if value_field not in df.columns:
-            return None
-        row = df.agg(F.max(value_field).alias("wm")).first()
-        return row["wm"] if row else None
+        """max(value_field) over the table: a JDBC aggregate on a
+        Database source; on a lakehouse source the largest row-group
+        max statistic in the parquet footers when the column is
+        integral and the path local, else one Spark aggregate."""
+        return _sink_last_value(self, value_field)
+
+    def _parquet_root(self) -> str | None:
+        return (self.fs_path if isinstance(self.source, Filesystem)
+                else None)
 
     def _jdbc_execute_update(self, sql: str) -> int:
         """Driver-side DML on a Database source through the JVM's own JDBC
@@ -1092,6 +1274,11 @@ class Table(Model, Extractable, Loadable):
             connection.close()
 
     def recycle(self, key_field_label: str, key_value) -> None:
+        """Delete a prior run's rows: ``DELETE ... WHERE key = :run`` on a
+        Database source; on a lakehouse source a file-scoped delete —
+        files holding only the run are deleted, untouched files keep
+        their identity, files mixing runs are rewritten (footer stats
+        classify local parquet files without a Spark job)."""
         source = self.source
         if isinstance(source, Database):
             # delete-by-run-key, reference models.py:469-475; the key
@@ -1107,18 +1294,9 @@ class Table(Model, Extractable, Loadable):
             if self.audit is not None:
                 self.audit.query(sql, "D", records=deleted)
             return
-        if not os.path.isdir(self.fs_path):
-            return
-        df = self.extract()
-        if key_field_label not in df.columns:
-            return
-        kept = df.where(
-            (F.col(key_field_label) != F.lit(key_value))
-            | F.col(key_field_label).isNull()).localCheckpoint()
-        shutil.rmtree(self.fs_path)
-        kept.write.mode("overwrite").parquet(self.fs_path)
-        # drop stale file listings for the rewritten path
-        self.spark.catalog.refreshByPath(self.fs_path)
+        # lakehouse table: file-scoped delete/rewrite, see _recycle_files
+        _recycle_files(self, self.fs_path, "parquet", key_field_label,
+                       key_value)
 
 
 class Select(Model, Extractable):

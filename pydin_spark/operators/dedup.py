@@ -834,8 +834,10 @@ def _cap_buckets(buckets: DataFrame, max_bucket_size: int | None,
     # a singleton bucket yields only the self-pair the enumerators
     # exclude, so its rows are dead weight in the self-join — the
     # bucket analogue of :func:`_pairable_postings` (round-11,
-    # output-identical). The count is already on every row here; on a
-    # real corpus most buckets hold one doc, so this sheds the BULK of
+    # output-identical). This runs only on the capped path (the
+    # uncapped default returned above and keeps its singletons): the
+    # window count is already on every row here, so on a real corpus,
+    # where most buckets hold one doc, a capped run sheds the bulk of
     # the join input for one extra codegen'd comparison.
     return sized.where((F.col("__bsz") >= 2)
                        & (F.col("__bsz") <= max_bucket_size)) \

@@ -109,6 +109,9 @@ ENGINE_CONF: dict[str, str] = {
     "spark.ui.enabled": "false",
 }
 
+#: values Spark accepts by short name for spark.io.compression.codec
+SHUFFLE_CODECS = ("lz4", "zstd", "snappy", "lzf")
+
 #: env vars that cap native-library threading in Python workers; set
 #: (not overridden) on the driver process in get_session so local-mode
 #: workers, which inherit the driver env, get the same cap
@@ -146,6 +149,12 @@ def get_session(app_name: str = "pydin-spark", master: str | None = None,
     manager is configured; on a real cluster, leave ``master`` unset in
     the environment-provided config and spark-submit decides.
     """
+    codec = os.environ.get("PYDIN_SHUFFLE_CODEC")
+    if codec is not None and codec.lower() not in SHUFFLE_CODECS:
+        # fail here, naming the knob, not as an opaque JVM error later
+        raise ValueError(
+            f"PYDIN_SHUFFLE_CODEC={codec!r} is not a Spark compression "
+            f"codec; use one of {', '.join(SHUFFLE_CODECS)}")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # cap BLAS threads BEFORE any python worker can spawn (local-mode
     # workers inherit this process's env); a user-exported value wins
@@ -155,6 +164,9 @@ def get_session(app_name: str = "pydin-spark", master: str | None = None,
     resolved_master = master or f"local[{cpus}]"
     builder = builder.master(resolved_master)
     conf = dict(ENGINE_CONF)
+    if codec is not None:
+        # read per call, so an export after import still takes effect
+        conf["spark.io.compression.codec"] = codec
     if resolved_master.startswith("local"):
         mem = _local_driver_memory()
         if mem is not None:

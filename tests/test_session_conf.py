@@ -5,6 +5,8 @@ GB-per-stage shuffles (halved bytes, measured at the 100x replica)."""
 
 import importlib
 
+import pytest
+
 import pydin_spark.session as session_mod
 
 
@@ -22,3 +24,9 @@ def test_shuffle_codec_env_override(monkeypatch):
     finally:
         monkeypatch.delenv("PYDIN_SHUFFLE_CODEC")
         importlib.reload(session_mod)
+
+
+def test_bad_shuffle_codec_fails_fast_naming_the_env_var(monkeypatch):
+    monkeypatch.setenv("PYDIN_SHUFFLE_CODEC", "ztsd")
+    with pytest.raises(ValueError, match="PYDIN_SHUFFLE_CODEC"):
+        session_mod.get_session("bad-codec", master="local[1]")
